@@ -23,10 +23,19 @@ from reddit_can_bigdata_spark.operators.common import (
 from reddit_can_bigdata_spark.operators.graph import (
     _EDGES_SQL,
     _edges,
+    _graph_stats,
     _join_state,
+    _resolve,
     _state_mode,
+    _sym,
     STATE_BROADCAST_MAX_ROWS,
     UNTIL_CONVERGED_MAX_ROUNDS,
+)
+from reddit_can_bigdata_spark.operators.graphkernel import (
+    Graph,
+    closeness_kernel_df,
+    closeness_sampled_kernel_df,
+    eigenvector_kernel_df,
 )
 from reddit_can_bigdata_spark.registry import register
 
@@ -411,8 +420,7 @@ def g5_eigenvector_centrality(
     spark: SparkSession,
     sf_dir: str,
     state_mode: str | None = None,
-    edges: DataFrame | None = None,
-    graph=None,
+    graph: Graph | None = None,
 ) -> DataFrame:
     """G5: weighted eigenvector centrality
     (`network-analysis/network_analysis.py:163`) by power iteration —
@@ -420,22 +428,11 @@ def g5_eigenvector_centrality(
     Same Pregel-as-DataFrame loop as PageRank (G6): one shuffle per
     iteration on the destination key; the norm is a scalar aggregate
     broadcast back."""
-    if state_mode is None:
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_graph_auto,
-            eigenvector_kernel_df,
-        )
-
-        g = collect_graph_auto(spark, sf_dir, edges, graph)
-        if g is not None:
-            return eigenvector_kernel_df(spark, g, EIGEN_ITERS)
-    e = edges if edges is not None else _edges(spark, sf_dir)
-    sym = e.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), F.col("weight").cast("double").alias("w")
-    ).unionAll(
-        e.select(
-            F.col("v").alias("src"), F.col("u").alias("dst"), F.col("weight").cast("double").alias("w")
-        )
+    g = _resolve(spark, sf_dir, graph, state_mode)
+    if state_mode is None and g.arrays is not None:
+        return eigenvector_kernel_df(spark, g.arrays, EIGEN_ITERS)
+    sym = _sym(
+        g.edges, F.col("weight").cast("double").alias("w")
     ).repartition("src").cache()
     v = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.lit(1.0).alias("val")
@@ -531,10 +528,7 @@ def g4b_closeness_weighted(
     Bellman-Ford; exact once rounds ≥ longest shortest path's hop
     count — true on the dense test graphs, documented bound
     otherwise). Integer distances → exact oracle parity."""
-    e = _edges(spark, sf_dir)
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst"), "weight").unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"), "weight")
-    ).cache()
+    sym = _sym(_edges(spark, sf_dir), "weight").cache()
     dist = _bfs_distances(sym, CLOSENESS_HOPS, F.col("weight"), until_converged=until_converged)
     return (
         dist.groupBy("src")
@@ -591,10 +585,9 @@ def _closeness_sampled_oracle() -> str:
 def g4c_closeness_sampled(
     spark: SparkSession,
     sf_dir: str,
-    edges: DataFrame | None = None,
+    graph: Graph | None = None,
     until_converged: bool = False,
     sample_mod: int | None = None,
-    graph=None,
 ) -> DataFrame:
     """G4 at scale: pivot-SAMPLED closeness (Eppstein–Wang estimator).
 
@@ -618,20 +611,12 @@ def g4c_closeness_sampled(
     it from a relax-row budget when the graph densifies past what
     1-in-7 affords (round-11 probe finding)."""
     sample_mod = CLOSENESS_SAMPLE_MOD if sample_mod is None else sample_mod
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        closeness_sampled_kernel_df,
-        collect_graph_auto,
-    )
-
-    g = collect_graph_auto(spark, sf_dir, edges, graph)
-    if g is not None:
+    g = _resolve(spark, sf_dir, graph)
+    if g.arrays is not None:
         return closeness_sampled_kernel_df(
-            spark, g, CLOSENESS_HOPS, sample_mod, until_converged
+            spark, g.arrays, CLOSENESS_HOPS, sample_mod, until_converged
         )
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).cache()
+    sym = _sym(g.edges).cache()
     nodes = sym.select("src").distinct()
     srcs = nodes.where(F.col("src") % sample_mod == 0)
     dist = _bfs_distances(
@@ -695,10 +680,7 @@ def _closeness_weighted_sampled_oracle() -> str:
     tags=("graph", "closeness", "weighted", "sampled", "iterative"),
 )
 def g4d_closeness_weighted_sampled(
-    spark: SparkSession,
-    sf_dir: str,
-    edges: DataFrame | None = None,
-    until_converged: bool = False,
+    spark: SparkSession, sf_dir: str, until_converged: bool = False
 ) -> DataFrame:
     """G4b at scale: pivot-SAMPLED weighted closeness — the 100× path
     for the reference's exact form (`nx.closeness_centrality(G,
@@ -715,10 +697,7 @@ def g4d_closeness_weighted_sampled(
     would freeze wrong distances. `_bfs_distances` enforces this
     (pull requires unweighted=True). State O(K·N); integer distances
     until one double division → exact oracle parity."""
-    e = edges if edges is not None else _edges(spark, sf_dir)
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst"), "weight").unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"), "weight")
-    ).cache()
+    sym = _sym(_edges(spark, sf_dir), "weight").cache()
     nodes = sym.select("src").distinct()
     srcs = nodes.where(F.col("src") % CLOSENESS_SAMPLE_MOD == 0)
     dist = _bfs_distances(
@@ -749,9 +728,8 @@ def g4d_closeness_weighted_sampled(
 def g4_closeness_centrality(
     spark: SparkSession,
     sf_dir: str,
-    edges: DataFrame | None = None,
+    graph: Graph | None = None,
     until_converged: bool = False,
-    graph=None,
 ) -> DataFrame:
     """G4: closeness centrality over hop distances
     (`network-analysis/network_analysis.py:154` uses edge weights as
@@ -764,20 +742,12 @@ def g4_closeness_centrality(
     this becomes sampled-sources (pivot nodes) with identical code on
     a sampled src set (SURVEY §7.3 risk 2).
     """
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        closeness_kernel_df,
-        collect_graph_auto,
-    )
-
-    g = collect_graph_auto(spark, sf_dir, edges, graph)
-    if g is not None:
+    g = _resolve(spark, sf_dir, graph)
+    if g.arrays is not None:
         return closeness_kernel_df(
-            spark, g, CLOSENESS_HOPS, until_converged, out_col="closeness"
+            spark, g.arrays, CLOSENESS_HOPS, until_converged, out_col="closeness"
         )
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).cache()
+    sym = _sym(g.edges).cache()
     dist = _bfs_distances(
         sym, CLOSENESS_HOPS, F.lit(1), unweighted=True, until_converged=until_converged
     )
@@ -819,10 +789,8 @@ CLOSENESS_RELAX_ROWS_PER_SLOT = 100_000_000
 def closeness_for_scale(
     spark: SparkSession,
     sf_dir: str,
-    edges: DataFrame | None = None,
-    n_nodes: int | None = None,
+    graph: Graph | None = None,
     mode: str | None = None,
-    graph=None,
 ) -> DataFrame:
     """Size-gated closeness: exact `g4` below
     ``CLOSENESS_EXACT_MAX_NODES`` graph nodes, sampled `g4c`
@@ -864,42 +832,12 @@ def closeness_for_scale(
     """
     import logging
 
+    # resolve the graph ONCE here: it answers the gate and flows down
+    # to whichever closeness arm the gate picks (no second collect)
+    g = _resolve(spark, sf_dir, graph)
     sample_mod = None
     if mode is None:
-        if graph is None:
-            # resolve the kernel-tier graph ONCE here: it answers the
-            # gate for free and flows down to whichever closeness arm
-            # the gate picks (no second collect)
-            from reddit_can_bigdata_spark.operators.graphkernel import (
-                collect_graph_auto,
-            )
-
-            graph = collect_graph_auto(spark, sf_dir, edges)
-        if graph is not None:
-            # a pre-collected CSR already carries both gate inputs —
-            # no extra edge-table pass (same numbers: its node
-            # vocabulary is distinct(u ∪ v) and its symmetric slot
-            # count is 2·|E|)
-            if n_nodes is None:
-                n_nodes = graph.n_nodes
-            e_sym = graph.n_sym_edges
-        else:
-            e = edges if edges is not None else _edges(spark, sf_dir)
-            # one pass over the symmetric node column gives both gate
-            # inputs: distinct nodes and E_sym (= 2·|E|, each undirected
-            # edge relaxed in both directions every frontier pass)
-            stats = (
-                e.select(F.col("u").alias("n"))
-                .unionAll(e.select(F.col("v").alias("n")))
-                .agg(
-                    F.count_distinct(F.col("n")).alias("nn"),
-                    F.count("*").alias("e_sym"),
-                )
-                .collect()[0]
-            )
-            if n_nodes is None:
-                n_nodes = stats["nn"]
-            e_sym = stats["e_sym"]
+        n_nodes, e_sym = _graph_stats(g)
         slots = spark.sparkContext.defaultParallelism
         relax_rows = n_nodes * e_sym
         relax_budget = CLOSENESS_RELAX_ROWS_PER_SLOT * slots
@@ -934,7 +872,7 @@ def closeness_for_scale(
             sample_mod,
         )
     if mode == "exact":
-        return g4_closeness_centrality(spark, sf_dir, edges=edges, graph=graph)
+        return g4_closeness_centrality(spark, sf_dir, graph=g)
     return g4c_closeness_sampled(
-        spark, sf_dir, edges=edges, sample_mod=sample_mod, graph=graph
+        spark, sf_dir, graph=g, sample_mod=sample_mod
     ).select("node", F.col("closeness_est").alias("closeness"))

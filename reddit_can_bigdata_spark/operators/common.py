@@ -76,11 +76,10 @@ def iter_checkpoint(df: DataFrame, eager: bool = True) -> DataFrame:
     return df.localCheckpoint(eager=eager)
 
 
-#: conf knob: input bytes (plan-statistics estimate) each spread
-#: partition should carry BEFORE the downstream explode fans it out
-#: 30-100x. Sizing the fan-out stage from its input keeps the task
-#: count proportional to the data instead of pinned to the core count.
-SPREAD_TARGET_BYTES_CONF = "spark.redditCan.spreadTargetBytes"
+#: input bytes (plan-statistics estimate) each spread partition
+#: should carry BEFORE the downstream explode fans it out 30-100x.
+#: Sizing the fan-out stage from its input keeps the task count
+#: proportional to the data instead of pinned to the core count. The
 #: measured sweep at sf0.1 over the 10 heaviest fan-out queries
 #: (wall / executor-cpu totals): flat 32-way 19.5s / 89; 256 KiB
 #: 21.9 / 23.5; 96 KiB 17.7 / 35.2; 48 KiB 15.7 / 43.8 — 48 KiB is
@@ -107,9 +106,9 @@ def spread(df: DataFrame) -> DataFrame:
     seconds for a token groupBy whose 1-partition form costs 0.07-0.1.
     The partition count now comes from the optimizer's size estimate
     (parquet footer bytes at the leaves — a driver-side lookup, no
-    job): one partition per ``spark.redditCan.spreadTargetBytes``
-    (default ``SPREAD_TARGET_BYTES`` = 48 KiB pre-fan-out, from the
-    sweep above), capped at ``defaultParallelism``.
+    job): one partition per ``SPREAD_TARGET_BYTES`` (48 KiB
+    pre-fan-out, from the sweep above), capped at
+    ``defaultParallelism``.
     Unknown/absurd estimates fall back to the full core count, the old
     behavior. At 100 TB the cap always wins and this stays the full
     cluster-wide rebalance."""
@@ -132,15 +131,7 @@ def spread_parts(df: DataFrame, scale: float = 1.0) -> int:
     try:
         size = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
         if 0 < size < (1 << 50):  # unknown stats show up as huge defaults
-            try:
-                target = int(
-                    df.sparkSession.conf.get(
-                        SPREAD_TARGET_BYTES_CONF, str(SPREAD_TARGET_BYTES)
-                    )
-                )
-            except ValueError:
-                target = SPREAD_TARGET_BYTES
-            target = int(target * scale)
+            target = int(SPREAD_TARGET_BYTES * scale)
             if target > 0:
                 parts = max(1, min(maxp, -(-size // target)))
     except Exception:  # stats unavailable: keep the full-parallelism form

@@ -503,26 +503,25 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-ceiling guard; the final mapping is one left join on
     doc_id — corpus-linear."""
     from reddit_can_bigdata_spark.operators.graph import min_label_components
+    from reddit_can_bigdata_spark.operators.graphkernel import resolve_graph
 
     pairs = dedup_minhash_lsh(spark, sf_dir).where(
         F.col("est_jaccard") >= CLUSTER_JACCARD
     )
-    # localCheckpoint, NOT cache (optimization round 12, measurement
-    # integrity): the component loop's multi-action consumption needs
-    # the pair graph materialized once, but a .cache() here is keyed on
-    # the analyzed plan, so back-to-back runs of this query in one
-    # session (bench reps!) silently reused the first run's cached sym
-    # and skipped the whole MinHash pipeline — deflating the bench
-    # median and leaking CacheManager entries. Checkpoint blocks are
-    # per-instance (no cross-run reuse) and GC-cleaned.
-    sym = (
-        pairs.select(F.col("doc_a").alias("src"), F.col("doc_b").alias("dst"))
-        .unionAll(pairs.select(F.col("doc_b").alias("src"), F.col("doc_a").alias("dst")))
-        .repartition("dst")
-        .localCheckpoint(eager=False)
+    # resolve_graph materializes the pair graph once with a
+    # localCheckpoint, NOT a cache (optimization round 12, measurement
+    # integrity): a .cache() is keyed on the analyzed plan, so
+    # back-to-back runs of this query in one session (bench reps!)
+    # silently reused the first run's cached pairs and skipped the
+    # whole MinHash pipeline. Checkpoint blocks are per-instance (no
+    # cross-run reuse) and GC-cleaned.
+    pair_graph = resolve_graph(
+        spark,
+        sf_dir,
+        edges=pairs.select(F.col("doc_a").alias("u"), F.col("doc_b").alias("v")),
     )
     labels = min_label_components(
-        sym, 0, until_converged=True, shortcut=True, require_converged=True
+        pair_graph, 0, until_converged=True, shortcut=True, require_converged=True
     )
     docs = tables(spark, sf_dir)["documents"].select("doc_id")
     return docs.join(labels, docs.doc_id == labels.node, "left").select(

@@ -21,6 +21,15 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window, functions as F
 
 from reddit_can_bigdata_spark.operators.common import iter_checkpoint, tables
+from reddit_can_bigdata_spark.operators.graphkernel import (
+    Graph,
+    betweenness_kernel_df,
+    degree_kernel_df,
+    min_label_kernel,
+    pagerank_kernel_df,
+    resolve_graph,
+    triangles_kernel_df,
+)
 from reddit_can_bigdata_spark.registry import register
 
 PAGERANK_ITERS = 10
@@ -171,6 +180,43 @@ def _edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _sym(e: DataFrame, *cols) -> DataFrame:
+    """Both directions of every undirected (u, v) edge as
+    (src, dst, *cols) — the input shape of every vertex-program loop."""
+    return e.select(F.col("u").alias("src"), F.col("v").alias("dst"), *cols).unionAll(
+        e.select(F.col("v").alias("src"), F.col("u").alias("dst"), *cols)
+    )
+
+
+def _resolve(
+    spark: SparkSession, sf_dir: str, graph: Graph | None, state_mode: str | None = None
+) -> Graph:
+    """The caller's graph handle, else a fresh one. A pinned
+    ``state_mode`` forces the distributed loop, so it skips the kernel
+    gate and its collection and reads the lazily built edge frame."""
+    if graph is not None:
+        return graph
+    if state_mode is not None:
+        return Graph(spark, None, lambda: _edges(spark, sf_dir))
+    return resolve_graph(spark, sf_dir)
+
+
+def _graph_stats(g: Graph) -> tuple[int, int]:
+    """(distinct nodes, symmetric edge rows E_sym = 2·|E|) — the inputs
+    of the work-budget gates. Free off the CSR; else one pass over the
+    symmetric node column of the edge frame."""
+    if g.arrays is not None:
+        return g.arrays.n_nodes, g.arrays.n_sym_edges
+    e = g.edges
+    row = (
+        e.select(F.col("u").alias("n"))
+        .unionAll(e.select(F.col("v").alias("n")))
+        .agg(F.count_distinct(F.col("n")).alias("nn"), F.count("*").alias("e_sym"))
+        .collect()[0]
+    )
+    return row["nn"], row["e_sym"]
+
+
 @register(
     "g1_a14_edge_aggregation",
     oracle="""
@@ -232,38 +278,25 @@ def g1_a14_edge_aggregation(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def g2_degree_centrality(
-    spark: SparkSession,
-    sf_dir: str,
-    edges: DataFrame | None = None,
-    graph=None,
+    spark: SparkSession, sf_dir: str, graph: Graph | None = None
 ) -> DataFrame:
     """G2+G10: degree and weighted degree per node, plus
     degree/(n-1) centrality (`network-analysis/network_analysis.py:138`).
     Explode both endpoints → one hash aggregate; the n-1 scalar
-    broadcasts. ``edges`` lets a composite share one materialized
-    edge table across several centralities; ``graph`` (a pre-collected
-    ``GraphArrays``) lets it read degrees off the shared CSR with zero
-    edge-table passes (optimization round 11)."""
-    if graph is None and edges is None:
-        # Standalone call: resolve through the kernel tier like every
-        # other graph query (optimization round 12). collect_graph_raw
-        # makes the gate a filesystem stat and the edge build ~0.3s of
-        # driver numpy, so the earlier judgment that "collecting just
-        # to count row lengths costs more than it saves" no longer
-        # holds: A/B at sf0.1 (n=4, values identical) — distributed
-        # 1.88s wall / 3.4 cpu-s vs kernel 0.63s / 0.12. Above the
-        # raw/kernel gates this returns None and the one-aggregate
-        # distributed plan below is unchanged (the 100 TB path).
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_graph_auto,
-        )
+    broadcasts. ``graph`` lets a composite share one resolved graph
+    across several centralities.
 
-        graph = collect_graph_auto(spark, sf_dir)
-    if graph is not None:
-        from reddit_can_bigdata_spark.operators.graphkernel import degree_kernel_df
-
-        return degree_kernel_df(spark, graph)
-    e = edges if edges is not None else _edges(spark, sf_dir)
+    With arrays the degrees come straight off the CSR (optimization
+    round 12): the raw-collect stat gate makes resolution a filesystem
+    stat plus ~0.3s of driver numpy, so collecting just to count row
+    lengths costs less than one distributed edge build — A/B at sf0.1
+    (n=4, values identical): distributed 1.88s wall / 3.4 cpu-s vs
+    kernel 0.63s / 0.12. On the loop tier the one-aggregate plan below
+    reads the handle's materialized edges (the 100 TB path)."""
+    g = _resolve(spark, sf_dir, graph)
+    if g.arrays is not None:
+        return degree_kernel_df(spark, g.arrays)
+    e = g.edges
     # One edge-table pass, not four: the u/v union as a generator over
     # a single scan (explode of the two endpoint structs), and the
     # |V|-row degree table materialized so the n-count broadcast job and
@@ -359,7 +392,7 @@ def g8_graph_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     bench=True,
 )
 def g9_triangles_clustering(
-    spark: SparkSession, sf_dir: str, edges: DataFrame | None = None
+    spark: SparkSession, sf_dir: str, graph: Graph | None = None
 ) -> DataFrame:
     """G9: triangle counting with DEGREE ORIENTATION — every edge is
     directed from its lower-(degree, id) endpoint to the higher one,
@@ -377,15 +410,9 @@ def g9_triangles_clustering(
     cached; the wedge join and the closing-edge join shuffle on vertex
     ids.
     """
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        TRIANGLE_DENSE_MAX_NODES,
-        collect_graph_auto,
-        triangles_kernel_df,
-    )
-
-    g = collect_graph_auto(spark, sf_dir, edges)
-    if g is not None and g.n_nodes <= TRIANGLE_DENSE_MAX_NODES:
-        tk = triangles_kernel_df(spark, g)
+    g = _resolve(spark, sf_dir, graph)
+    if g.dense:
+        tk = triangles_kernel_df(spark, g.arrays)
         local_k = F.when(
             F.col("degree") >= 2,
             2.0
@@ -400,7 +427,7 @@ def g9_triangles_clustering(
                 F.try_divide(F.sum(local_k).cast("double"), F.count("*")), 6
             ).alias("avg_clustering"),
         )
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v").cache()
+    e = g.edges.select("u", "v").cache()
     deg = (
         e.select(F.col("u").alias("node"))
         .unionAll(e.select(F.col("v").alias("node")))
@@ -487,9 +514,7 @@ def _triangles_per_node_complement(e: DataFrame, deg: DataFrame) -> DataFrame:
     |missing|·deg through two broadcastable edge joins, spread across
     tasks) and subtract. Exact for any graph; chosen only when the
     missing set is small."""
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    sym = _sym(e)
     nodes = deg.select("node")
     a = nodes.select(F.col("node").alias("a"))
     b = nodes.select(F.col("node").alias("b"))
@@ -597,7 +622,7 @@ TRIANGLE_WEDGE_ROWS_PER_SLOT = 100_000_000
     tags=("graph", "triangles", "sampled"),
 )
 def g9b_triangles_wedge_sampled(
-    spark: SparkSession, sf_dir: str, edges: DataFrame | None = None
+    spark: SparkSession, sf_dir: str, graph: Graph | None = None
 ) -> DataFrame:
     """G9 at the scale where exact counting dies: estimate triangles
     and average clustering from O(E_sym) wedge samples instead of
@@ -628,10 +653,10 @@ def g9b_triangles_wedge_sampled(
     memory (`network-analysis/network_analysis.py:335`); this is the
     form that survives the graph NetworkX cannot hold.
     """
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v").cache()
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    )
+    # never a kernel query: read the caller's edges, else build them
+    edges = graph.edges if graph is not None else _edges(spark, sf_dir)
+    e = edges.select("u", "v").cache()
+    sym = _sym(e)
     hk = (F.col("dst") * F.lit(WEDGE_HASH_MULT)) % F.lit(WEDGE_HASH_MOD)
     w = Window.partitionBy("src").orderBy(hk.asc(), F.col("dst").asc())
     tested = (
@@ -676,7 +701,7 @@ def g9b_triangles_wedge_sampled(
 def triangles_for_scale(
     spark: SparkSession,
     sf_dir: str,
-    edges: DataFrame | None = None,
+    graph: Graph | None = None,
     mode: str | None = None,
 ) -> DataFrame:
     """Work-budget-gated triangle counting: exact `g9` while the
@@ -693,9 +718,9 @@ def triangles_for_scale(
     """
     import logging
 
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
+    g = _resolve(spark, sf_dir, graph)
     if mode is None:
-        e = e.cache()
+        e = g.edges.select("u", "v").cache()
         deg = (
             e.select(F.col("u").alias("node"))
             .unionAll(e.select(F.col("v").alias("node")))
@@ -724,8 +749,8 @@ def triangles_for_scale(
             budget,
         )
     if mode == "exact":
-        return g9_triangles_clustering(spark, sf_dir, edges=e)
-    return g9b_triangles_wedge_sampled(spark, sf_dir, edges=e).select(
+        return g9_triangles_clustering(spark, sf_dir, graph=g)
+    return g9b_triangles_wedge_sampled(spark, sf_dir, graph=g).select(
         F.round("triangles_est").cast("long").alias("total_triangles"),
         F.col("avg_clustering_est").alias("avg_clustering"),
     )
@@ -774,8 +799,7 @@ def g6_pagerank(
     spark: SparkSession,
     sf_dir: str,
     state_mode: str | None = None,
-    edges: DataFrame | None = None,
-    graph=None,
+    graph: Graph | None = None,
 ) -> DataFrame:
     """G6: weighted PageRank (`nx.pagerank`,
     `network-analysis/network_analysis.py:171`) as an iterative
@@ -787,26 +811,13 @@ def g6_pagerank(
     checkpoint every ~5 iterations to truncate lineage, and partition
     the edge list by src so the join is co-located (G5 eigenvector
     centrality is this same loop with a normalize step instead of the
-    teleport term). ``edges`` lets a composite share one materialized
-    edge table across several centralities.
+    teleport term). ``graph`` lets a composite share one resolved
+    graph across several centralities.
     """
-    if state_mode is None:
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_graph_auto,
-            pagerank_kernel_df,
-        )
-
-        g = collect_graph_auto(spark, sf_dir, edges, graph)
-        if g is not None:
-            return pagerank_kernel_df(spark, g, PAGERANK_ITERS, PAGERANK_DAMPING)
-    e = edges if edges is not None else _edges(spark, sf_dir)
-    sym = e.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), F.col("weight").cast("double").alias("w")
-    ).unionAll(
-        e.select(
-            F.col("v").alias("src"), F.col("u").alias("dst"), F.col("weight").cast("double").alias("w")
-        )
-    )
+    g = _resolve(spark, sf_dir, graph, state_mode)
+    if state_mode is None and g.arrays is not None:
+        return pagerank_kernel_df(spark, g.arrays, PAGERANK_ITERS, PAGERANK_DAMPING)
+    sym = _sym(g.edges, F.col("weight").cast("double").alias("w"))
     wdeg = sym.groupBy("src").agg(F.sum("w").alias("wd"))
     # Iterative loops pay per-task scheduler overhead EVERY round, so
     # the cached transition matrix wants few, fat partitions (measured
@@ -949,13 +960,8 @@ def _label_prop(
     """Label propagation over the event co-occurrence graph: builds
     the cached dst-partitioned symmetric edge list, runs
     `label_prop_partition`; returns (sym, labels)."""
-    e = _edges(spark, sf_dir)
-    sym = e.select(
-        F.col("u").alias("src"), F.col("v").alias("dst"), F.col("weight").cast("double").alias("w")
-    ).unionAll(
-        e.select(
-            F.col("v").alias("src"), F.col("u").alias("dst"), F.col("weight").cast("double").alias("w")
-        )
+    sym = _sym(
+        _edges(spark, sf_dir), F.col("weight").cast("double").alias("w")
     ).repartition("dst").cache()
     return sym, label_prop_partition(sym, state_mode)
 
@@ -1057,23 +1063,24 @@ def g7c_modularity(
 
 
 def min_label_components(
-    sym: DataFrame | None,
+    graph: Graph,
     iters: int,
     state_mode: str | None = None,
     until_converged: bool = False,
     shortcut: bool = False,
     require_converged: bool = False,
-    graph=None,
 ) -> DataFrame:
-    """Min-label propagation over a symmetric edge list (src, dst):
-    every node repeatedly adopts the smallest label among itself and
-    its neighbors for ``iters`` fixed rounds (≥ component diameter ⇒
+    """Min-label propagation over an undirected graph: every node
+    repeatedly adopts the smallest label among itself and its
+    neighbors for ``iters`` fixed rounds (≥ component diameter ⇒
     connected components). Returns (node, label).
 
-    Each round = one state join (broadcast under the `_state_mode`
-    ceiling, co-partitioned shuffle above) + one hash aggregate —
-    linear in |E|. The caller should pass a cached, dst-partitioned
-    ``sym``. Shared by G7 components and the dedup clusterer.
+    Under the kernel gate (and no pinned ``state_mode``) the rounds
+    run as :func:`min_label_kernel` over the handle's CSR. Otherwise
+    each round = one state join (broadcast under the `_state_mode`
+    ceiling, co-partitioned shuffle above) + one hash aggregate over
+    the dst-partitioned symmetric edge list — linear in |E|. Shared by
+    G7 components, the user-network table and the dedup clusterer.
 
     ``shortcut=True`` adds a pointer-doubling step per round
     (label ← min(label, label[label]), one extra |V|-sized state
@@ -1085,33 +1092,26 @@ def min_label_components(
     depends on full components (the leakage-safe cluster split) must
     set it, because a silently-truncated propagation leaves two linked
     docs with different canonical ids."""
+    global LAST_COMPONENT_ROUNDS
     rounds_budget = UNTIL_CONVERGED_MAX_ROUNDS if until_converged else iters
-    if state_mode is None:
-        from pyspark.sql import SparkSession
-
-        from reddit_can_bigdata_spark.operators.graphkernel import (
-            collect_sym,
-            min_label_kernel,
+    if state_mode is None and graph.arrays is not None:
+        nodes_arr, labels_arr, executed, converged = min_label_kernel(
+            graph.arrays, rounds_budget, shortcut=shortcut
         )
+        LAST_COMPONENT_ROUNDS = executed
+        if require_converged and not converged:
+            _raise_unconverged(rounds_budget, until_converged, shortcut)
+        if nodes_arr.shape[0] == 0:
+            return graph.spark.createDataFrame([], "node long, label long")
+        import pandas as pd
 
-        spark = (
-            sym.sparkSession if sym is not None else SparkSession.getActiveSession()
+        return graph.spark.createDataFrame(
+            pd.DataFrame({"node": nodes_arr, "label": labels_arr})
         )
-        ga = graph if graph is not None else collect_sym(sym, spark)
-        if ga is not None:
-            nodes_arr, labels_arr, executed, converged = min_label_kernel(
-                ga, rounds_budget, shortcut=shortcut
-            )
-            LAST_COMPONENT_ROUNDS = executed
-            if require_converged and not converged:
-                _raise_unconverged(rounds_budget, until_converged, shortcut)
-            if nodes_arr.shape[0] == 0:
-                return spark.createDataFrame([], "node long, label long")
-            import pandas as pd
-
-            return spark.createDataFrame(
-                pd.DataFrame({"node": nodes_arr, "label": labels_arr})
-            )
+    # localCheckpoint, not cache: the per-round consumers need the pair
+    # list materialized once, and checkpoint blocks are per-instance
+    # (a plan-keyed .cache() is reused across query instances)
+    sym = _sym(graph.edges).repartition("dst").localCheckpoint(eager=False)
     labels = sym.select(F.col("src").alias("node")).distinct().select(
         "node", F.col("node").alias("label")
     )
@@ -1258,26 +1258,12 @@ def g7_connected_components(
     which is inherently sequential; SURVEY §7.3 risk 1 keeps exact
     Louvain as a driver-side small-scale fallback (tests/test_graph).
     Output: one row per component with its size."""
-    g = None
-    if state_mode is None:
-        from reddit_can_bigdata_spark.operators.graphkernel import collect_graph_auto
-
-        # the CSR's indices ARE the symmetric pair list — under the
-        # kernel gate the whole sym-DataFrame build (edge aggregate +
-        # union + repartition + cache + re-collect) disappears
-        g = collect_graph_auto(spark, sf_dir)
-    if g is not None:
-        labels = min_label_components(
-            None, CC_ITERS, state_mode, until_converged=until_converged, graph=g
-        )
-    else:
-        e = _edges(spark, sf_dir).select("u", "v")
-        sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        ).repartition("dst").cache()
-        labels = min_label_components(
-            sym, CC_ITERS, state_mode, until_converged=until_converged
-        )
+    labels = min_label_components(
+        _resolve(spark, sf_dir, None, state_mode),
+        CC_ITERS,
+        state_mode,
+        until_converged=until_converged,
+    )
     return labels.groupBy(F.col("label").cast("long").alias("component")).agg(
         F.count("*").alias("n_nodes")
     )
@@ -1516,10 +1502,9 @@ def _betweenness_sampled_oracle() -> str:
 def g3b_betweenness_sampled(
     spark: SparkSession,
     sf_dir: str,
-    edges: DataFrame | None = None,
+    graph: Graph | None = None,
     until_converged: bool = False,
     sample_mod: int | None = None,
-    graph=None,
 ) -> DataFrame:
     """G3 at scale: source-SAMPLED Brandes betweenness, fully
     distributed (the scale path `network-analysis/network_analysis.py:145`
@@ -1543,20 +1528,12 @@ def g3b_betweenness_sampled(
     Scale: state is O(K·N) per phase, every round is join+agg on
     (src, node) keys — no collected adjacency, no O(N²) blowup."""
     sample_mod = BW_SAMPLE_MOD if sample_mod is None else sample_mod
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        betweenness_kernel_df,
-        collect_graph_auto,
-    )
-
-    g = collect_graph_auto(spark, sf_dir, edges, graph)
-    if g is not None:
+    g = _resolve(spark, sf_dir, graph)
+    if g.arrays is not None:
         return betweenness_kernel_df(
-            spark, g, BW_LEVELS, sample_mod, until_converged
+            spark, g.arrays, BW_LEVELS, sample_mod, until_converged
         )
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select("u", "v")
-    sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-        e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-    ).cache()
+    sym = _sym(g.edges).cache()
     nodes = sym.select(F.col("src").alias("node")).distinct()
     srcs = nodes.where(F.col("node") % sample_mod == 0)
     frontiers = _brandes_forward(sym, srcs, BW_LEVELS, until_converged=until_converged)
@@ -1586,7 +1563,7 @@ def g3b_betweenness_sampled(
 def betweenness_for_scale(
     spark: SparkSession,
     sf_dir: str,
-    edges: DataFrame | None = None,
+    graph: Graph | None = None,
     sample_mod: int | None = None,
 ) -> DataFrame:
     """Work-budget-gated sampled betweenness: `g3b` with a sampling
@@ -1609,28 +1586,17 @@ def betweenness_for_scale(
     modulus is LOGGED when it departs."""
     import logging
 
-    e = (edges if edges is not None else _edges(spark, sf_dir)).select(
-        "u", "v"
-    )
+    g = _resolve(spark, sf_dir, graph)
     if sample_mod is None:
         from reddit_can_bigdata_spark.operators.common import (
             budgeted_sample_mod,
         )
 
-        e = e.cache()
-        stats = (
-            e.select(F.col("u").alias("n"))
-            .unionAll(e.select(F.col("v").alias("n")))
-            .agg(
-                F.count_distinct(F.col("n")).alias("nn"),
-                F.count("*").alias("e_sym"),
-            )
-            .collect()[0]
-        )
+        n_nodes, e_sym = _graph_stats(g)
         slots = spark.sparkContext.defaultParallelism
         sample_mod = budgeted_sample_mod(
-            stats["nn"],
-            stats["e_sym"],
+            n_nodes,
+            e_sym,
             2 * BW_LEVELS,
             slots,
             BW_SAMPLE_MOD,
@@ -1640,12 +1606,12 @@ def betweenness_for_scale(
             "betweenness_for_scale: sample_mod=%d (n_nodes=%d, e_sym=%d, "
             "%d slots)",
             sample_mod,
-            stats["nn"],
-            stats["e_sym"],
+            n_nodes,
+            e_sym,
             slots,
         )
     return g3b_betweenness_sampled(
-        spark, sf_dir, edges=e, sample_mod=sample_mod
+        spark, sf_dir, graph=g, sample_mod=sample_mod
     )
 
 

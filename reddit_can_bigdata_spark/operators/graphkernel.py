@@ -1,4 +1,5 @@
-"""Broadcast-tier vectorized graph kernels (optimization round 11).
+"""Graph resolution and the vectorized graph kernels (optimization
+rounds 11-12).
 
 The graph operators' join/aggregate loops are correct and scale-honest
 (state joins size-gated by `_state_mode`, relax volume budgeted per
@@ -6,28 +7,43 @@ task slot), but at the bench scale they execute 10^8-10^9 relax rows
 through row-at-a-time codegen at ~200-500 ns each, where the same
 adjacency walk costs ~1 ns as a vectorized numpy kernel
 (optimization-guide §4.2: let Spark distribute, hand whole batches to
-native code). This module supplies that kernel tier:
+native code).
 
-- the undirected edge AGGREGATE (u, v, weight) — never the raw
-  payload — is collected once per query via Arrow and broadcast,
-  exactly the broadcast-hash-join pattern (guide §3.2: the build side
-  is driver-collected and shipped); the gate
-  ``spark.redditCan.graphKernelMaxEdges`` (default 16M edge rows,
-  ~400 MB of CSR) bounds it the way
-  ``spark.sql.autoBroadcastJoinThreshold`` bounds a join build side;
-- per-source work (multi-source BFS for closeness, sampled Brandes,
-  per-node-block triangle counting) runs in EXECUTOR tasks via
-  ``mapInArrow`` over a chunked work list — Spark still owns
-  distribution, scheduling and fault tolerance;
-- whole-graph single-vector iterations (PageRank, eigenvector,
-  min-label) run as one executor task: a graph under the broadcast
-  gate is by definition single-executor-sized, and 10 rounds of
-  gather+bincount over E_sym edges is micro-seconds-per-million-edges
-  work that the per-round shuffle barrier used to dominate.
+Every graph query reads its graph through ONE handle,
+:func:`resolve_graph` → :class:`Graph`, which holds the graph in one
+of three tiers:
 
-Above the gate — or when a caller explicitly pins a ``state_mode`` —
-every operator falls back to the unchanged distributed loop, which
-remains the 100 TB path. Results are IDENTICAL by construction:
+- **dense** (``Graph.dense``: CSR arrays with V ≤
+  ``TRIANGLE_DENSE_MAX_NODES``): multi-source kernels run as one
+  driver-side BLAS matmul per BFS level, whole-graph iterations
+  (PageRank, eigenvector, min-label) as gather + bincount on the
+  driver, and every centrality is a driver-local table;
+- **CSR** (arrays above the dense ceiling, at most
+  ``spark.redditCan.graphKernelMaxEdges`` undirected edges, default
+  16M, ~400 MB of CSR — bounded the way
+  ``spark.sql.autoBroadcastJoinThreshold`` bounds a join build side):
+  per-source work (multi-source BFS for closeness, sampled Brandes)
+  runs in EXECUTOR tasks via ``mapInArrow`` over a broadcast CSR;
+- **loop** (no arrays: over the edge gate, the gate set to 0, or
+  ``spark.redditCan.iterCheckpointDir`` set): the unchanged
+  distributed DataFrame loops — the 100 TB path — over the edge
+  aggregate materialized exactly once (``localCheckpoint(eager=True)``)
+  and shared by every loop that reads the handle.
+
+Arrays come from one of two collections. Under the RAW gate the
+driver reads the two key columns of ``lineitem`` and builds the edge
+aggregate in numpy (no shuffle; the gate is a filesystem stat, not a
+job). The raw gate is derived from ``spark.driver.memory`` (Spark's
+1g default when unset) divided by ``RAW_COLLECT_RSS_RATIO`` = 7:
+round 12's probe (PERF.md, "Driver RSS at the raw-collect / CSR gate
+ceilings") measured the python driver peak at ≈ 6-7x the on-disk
+gate bytes, so an 8g driver admits ≈ 1.14 GiB of parquet. Otherwise
+the distributed aggregate is materialized and, when its row count is
+under the edge gate, collected once via Arrow (the broadcast-join
+build-side pattern).
+
+A caller that pins a ``state_mode`` gets the loop tier whatever the
+handle holds. Results are IDENTICAL across tiers by construction:
 the kernels replicate the exact fixed-round semantics of the
 registered oracles (hop caps, level caps, early exits on converged /
 empty frontiers, min-label round truncation), integer state stays
@@ -39,8 +55,9 @@ convention (see registry.py's float-stability rules).
 
 from __future__ import annotations
 
-from collections.abc import Iterator
+from collections.abc import Callable, Iterator
 from dataclasses import dataclass
+from functools import cached_property
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession, functions as F
@@ -82,6 +99,36 @@ class GraphArrays:
     @property
     def n_sym_edges(self) -> int:
         return int(self.indices.shape[0])
+
+    @property
+    def dense(self) -> bool:
+        """Under the dense-BLAS ceiling (see the dense tier below)."""
+        return self.n_nodes <= TRIANGLE_DENSE_MAX_NODES
+
+
+@dataclass
+class Graph:
+    """The one graph handle every graph builder reads.
+
+    ``arrays`` is the CSR under the kernel gate, else None (the loop
+    tier). ``edges`` is the (u, v[, weight]) edge-aggregate frame: on
+    the loop tier the materialized aggregate every loop shares; under
+    the raw-collect gate it is built lazily, only if a caller pins the
+    loop tier or needs the frame."""
+
+    spark: SparkSession
+    arrays: GraphArrays | None
+    build: Callable[[], DataFrame]
+
+    @cached_property
+    def edges(self) -> DataFrame:
+        return self.build()
+
+    @property
+    def dense(self) -> bool:
+        """Dense tier: every kernel output is a driver-local table, so
+        callers skip their materialization barriers."""
+        return self.arrays is not None and self.arrays.dense
 
 
 def kernel_edge_limit(spark: SparkSession) -> int:
@@ -135,50 +182,23 @@ def build_arrays(u: np.ndarray, v: np.ndarray, w: np.ndarray) -> GraphArrays:
     return GraphArrays(nodes=nodes, indptr=indptr, indices=indices, weights=weights)
 
 
-def collect_graph(
-    edges: DataFrame, spark: SparkSession, max_edges: int | None = None
-) -> GraphArrays | None:
-    """Collect the (small) edge aggregate as CSR arrays, or None.
-
-    The gate is a COUNT over ``edges`` — one cheap aggregate job over
-    a transient cache (so the gate probe and the Arrow transfer run
-    the edge build once; above the gate the cache is dropped
-    immediately and the caller's distributed loop proceeds with its
-    own caching). Under the gate the edge rows come back through one
-    Arrow transfer (`toArrow`): this is the broadcast-join build-side
-    pattern — metadata rows move to the driver once, the heavy relax
-    work never shuffles at all."""
-    limit = kernel_edge_limit(spark) if max_edges is None else max_edges
-    if limit <= 0:
-        return None
-    cols = ["u", "v", "weight"] if "weight" in edges.columns else ["u", "v"]
-    e = edges.select(*cols).persist()
-    try:
-        if e.count() > limit:
-            return None
-        tbl = e.toArrow()
-    finally:
-        e.unpersist()
-    u = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64)
-    v = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64)
-    if "weight" in cols:
-        w = tbl.column("weight").to_numpy(zero_copy_only=False).astype(np.int64)
-    else:
-        w = np.ones(u.shape[0], dtype=np.int64)
-    return build_arrays(u, v, w)
+#: round 12's measured ratio of python driver peak RSS to the on-disk
+#: bytes of the raw table collected (PERF.md, "Driver RSS at the
+#: raw-collect / CSR gate ceilings": ≈ 6-7x)
+RAW_COLLECT_RSS_RATIO = 7
 
 
-#: conf knob: ceiling on the ON-DISK byte size of the raw table the
-#: driver will collect to build the edge aggregate in numpy instead of
-#: running the distributed dedup + pair-explode + aggregate job chain.
-#: A stat() gate costs ZERO Spark jobs (a count gate was itself one
-#: full scan job of latency per graph query).
-GRAPH_RAW_COLLECT_MAX_BYTES_CONF = "spark.redditCan.graphRawCollectMaxBytes"
-#: 1 GiB of parquet ≈ 16-40M full-width lineitem rows; only the two
-#: key columns cross to the driver (≲ 640 MB of Arrow). Above it (any
-#: serious cluster scale) the distributed aggregate + collect_graph
-#: gate runs unchanged.
-GRAPH_RAW_COLLECT_MAX_BYTES = 1 << 30
+def _driver_memory(spark: SparkSession) -> str | None:
+    return spark.conf.get("spark.driver.memory", None)
+
+
+def raw_gate_bytes(spark: SparkSession) -> int:
+    """On-disk byte ceiling of the raw table the driver may collect:
+    ``spark.driver.memory`` (parsed like Spark parses it, MiB when
+    unitless; Spark's 1g default when unset) ÷ ``RAW_COLLECT_RSS_RATIO``."""
+    mem = _driver_memory(spark) or "1g"
+    jutils = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils
+    return (int(jutils.byteStringAsMb(mem)) << 20) // RAW_COLLECT_RSS_RATIO
 
 
 def _path_bytes(path: str) -> int:
@@ -256,35 +276,81 @@ def _edges_from_raw(
     return eu, ev, w.astype(np.int64)
 
 
-def collect_graph_raw(
-    spark: SparkSession, sf_dir: str, max_bytes: int | None = None
+def _edges_from_raw(
+    ok: np.ndarray, sk: np.ndarray
+) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
+    """The _edges aggregate in numpy: distinct (orderkey, suppkey) →
+    per-order u<v pair expansion → (u, v) multiplicity counts.
+    Integer-exact and multiset-identical to the SQL form by
+    construction (a sorted distinct list per order yields exactly the
+    u<v pairs the old DISTINCT + self-join emitted once each)."""
+    empty = np.empty(0, dtype=np.int64)
+    if ok.shape[0] == 0:
+        return empty, empty, empty
+
+    def _pack_unique(a: np.ndarray, b: np.ndarray, counts: bool):
+        if (
+            a.min(initial=0) >= 0
+            and b.min(initial=0) >= 0
+            and a.max(initial=0) < (1 << 31)
+            and b.max(initial=0) < (1 << 31)
+        ):
+            packed = (a.astype(np.uint64) << 32) | b.astype(np.uint64)
+            if counts:
+                uniq, cnt = np.unique(packed, return_counts=True)
+            else:
+                uniq, cnt = np.unique(packed), None
+            return (
+                (uniq >> 32).astype(np.int64),
+                (uniq & 0xFFFFFFFF).astype(np.int64),
+                cnt,
+            )
+        arr = np.stack([a, b], axis=1)
+        if counts:
+            uniq, cnt = np.unique(arr, axis=0, return_counts=True)
+        else:
+            uniq, cnt = np.unique(arr, axis=0), None
+        return uniq[:, 0].astype(np.int64), uniq[:, 1].astype(np.int64), cnt
+
+    uok, usk, _ = _pack_unique(ok, sk, counts=False)
+    # group boundaries per order (uok ascending; usk ascending within)
+    starts = np.concatenate(
+        [np.zeros(1, dtype=np.int64), np.flatnonzero(np.diff(uok)) + 1]
+    )
+    counts = np.diff(np.concatenate([starts, [uok.shape[0]]]))
+    us, vs = [], []
+    for k in np.unique(counts):
+        k = int(k)
+        if k < 2:
+            continue
+        sel = np.flatnonzero(counts == k)
+        mat = usk[starts[sel][:, None] + np.arange(k)[None, :]]
+        iu, iv = np.triu_indices(k, 1)
+        us.append(mat[:, iu].ravel())
+        vs.append(mat[:, iv].ravel())
+    if not us:
+        return empty, empty, empty
+    u = np.concatenate(us)
+    v = np.concatenate(vs)
+    eu, ev, w = _pack_unique(u, v, counts=True)
+    return eu, ev, w.astype(np.int64)
+
+
+def arrays_from_raw(
+    spark: SparkSession, sf_dir: str, max_bytes: int
 ) -> GraphArrays | None:
     """Build GraphArrays from ONE zero-shuffle scan of the raw
-    (orderkey, suppkey) columns, or None above the raw gate.
+    (orderkey, suppkey) columns, or None.
 
-    The distributed edge build is three narrow jobs (aggregate, gate
-    count, Arrow collect) whose wall cost at bench scale is almost
-    entirely stage latency; under the raw gate the same exact edge
-    aggregate falls out of ~0.3s of numpy on the driver (guide §1.2:
-    the cheapest execution is the one with no shuffle at all), and the
-    gate itself is a filesystem stat, not a job. Every fallback —
-    nulls in the key columns, too big on disk, a pair multiset past
-    the kernel edge gate — returns None and the caller proceeds with
-    the unchanged distributed build."""
+    The distributed edge build is a chain of narrow jobs whose wall
+    cost at bench scale is almost entirely stage latency; here the same
+    exact edge aggregate falls out of ~0.3s of numpy on the driver
+    (guide §1.2: the cheapest execution is the one with no shuffle at
+    all). Every fallback — lineitem over ``max_bytes`` on disk, nulls
+    in the key columns, a pair multiset past the kernel edge gate —
+    returns None and the caller proceeds with the distributed build."""
     import os
 
-    if max_bytes is None:
-        try:
-            max_bytes = int(
-                spark.conf.get(
-                    GRAPH_RAW_COLLECT_MAX_BYTES_CONF,
-                    str(GRAPH_RAW_COLLECT_MAX_BYTES),
-                )
-            )
-        except ValueError:
-            max_bytes = GRAPH_RAW_COLLECT_MAX_BYTES
-    if max_bytes <= 0 or kernel_edge_limit(spark) <= 0:
-        return None
     path = os.path.join(sf_dir, "lineitem.parquet")
     if not os.path.exists(path) or _path_bytes(path) > max_bytes:
         return None
@@ -309,62 +375,42 @@ def collect_graph_raw(
     return build_arrays(u, v, w)
 
 
-def collect_graph_auto(
-    spark: SparkSession,
-    sf_dir: str,
-    edges: DataFrame | None = None,
-    graph: GraphArrays | None = None,
-) -> GraphArrays | None:
-    """Kernel-tier graph resolution shared by every graph query: a
-    pre-collected graph wins; building from the default source tries
-    the raw-collect fast path first; an explicit ``edges`` frame (or a
-    raw-gate miss) goes through the distributed aggregate +
-    :func:`collect_graph` gate."""
-    if graph is not None:
-        return graph
+def _arrays_from_frame(e: DataFrame) -> GraphArrays:
+    cols = ["u", "v", "weight"] if "weight" in e.columns else ["u", "v"]
+    tbl = e.select(*cols).toArrow()
+    u = tbl.column("u").to_numpy(zero_copy_only=False).astype(np.int64)
+    v = tbl.column("v").to_numpy(zero_copy_only=False).astype(np.int64)
+    if "weight" in cols:
+        w = tbl.column("weight").to_numpy(zero_copy_only=False).astype(np.int64)
+    else:
+        w = np.ones(u.shape[0], dtype=np.int64)
+    return build_arrays(u, v, w)
+
+
+def resolve_graph(
+    spark: SparkSession, sf_dir: str, edges: DataFrame | None = None
+) -> Graph:
+    """Resolve the graph of ``sf_dir`` (or of an explicit undirected
+    ``edges`` frame with u, v and optionally weight) into one handle.
+
+    Without ``edges`` the raw-collect path runs first (zero jobs when
+    it hits). Otherwise the edge aggregate is materialized ONCE; under
+    the kernel edge gate its rows are collected into CSR arrays, above
+    it the materialized frame is what every distributed loop reads —
+    a gate miss never builds the aggregate twice."""
+    from reddit_can_bigdata_spark.operators import graph
+
+    limit = kernel_edge_limit(spark)
     if edges is None:
-        g = collect_graph_raw(spark, sf_dir)
-        if g is not None:
-            return g
-        from reddit_can_bigdata_spark.operators.graph import _edges
-
-        edges = _edges(spark, sf_dir)
-    return collect_graph(edges, spark)
-
-
-def collect_sym(
-    sym: DataFrame, spark: SparkSession, max_edges: int | None = None
-) -> GraphArrays | None:
-    """Like :func:`collect_graph` but over an already-symmetric
-    (src, dst) pair list (the min-label callers' input shape). The
-    pair list is collected as-is; weights are 1."""
-    limit = kernel_edge_limit(spark) if max_edges is None else max_edges
-    if limit <= 0:
-        return None
-    e = sym.select("src", "dst").persist()
-    try:
-        if e.count() > limit * 2:
-            return None
-        tbl = e.toArrow()
-    finally:
-        e.unpersist()
-    src = tbl.column("src").to_numpy(zero_copy_only=False).astype(np.int64)
-    dst = tbl.column("dst").to_numpy(zero_copy_only=False).astype(np.int64)
-    nodes = np.unique(np.concatenate([src, dst]))
-    sp = np.searchsorted(nodes, src).astype(np.int64)
-    dp = np.searchsorted(nodes, dst).astype(np.int32)
-    order = np.argsort(sp, kind="stable")
-    src_sorted = sp[order]
-    indices = dp[order]
-    indptr = np.searchsorted(
-        src_sorted, np.arange(nodes.shape[0] + 1, dtype=np.int64)
-    ).astype(np.int64)
-    return GraphArrays(
-        nodes=nodes,
-        indptr=indptr,
-        indices=indices,
-        weights=np.ones(indices.shape[0], dtype=np.int64),
-    )
+        if limit > 0:
+            arrays = arrays_from_raw(spark, sf_dir, raw_gate_bytes(spark))
+            if arrays is not None:
+                return Graph(spark, arrays, lambda: graph._edges(spark, sf_dir))
+        edges = graph._edges(spark, sf_dir)
+    e = edges.localCheckpoint(eager=True)
+    if limit <= 0 or e.count() > limit:
+        return Graph(spark, None, lambda: e)
+    return Graph(spark, _arrays_from_frame(e), lambda: e)
 
 
 def _gather(indptr: np.ndarray, indices: np.ndarray, frontier: np.ndarray):
@@ -474,7 +520,7 @@ def closeness_kernel_df(
         return _empty_result(spark, f"node long, {out_col} double")
     ids = g.nodes if sample_mod is None else g.nodes[g.nodes % sample_mod == 0]
     cap = (1 << 62) if until_converged else hops
-    if g.n_nodes <= TRIANGLE_DENSE_MAX_NODES and ids.shape[0]:
+    if g.dense and ids.shape[0]:
         import pandas as pd
 
         cnt, dsum, _ = _dense_closeness_counts(
@@ -572,7 +618,7 @@ def closeness_sampled_kernel_df(
         return _empty_result(spark, f"node long, {out_col} double")
     cap = (1 << 62) if until_converged else hops
     kk, nn = float(k), float(n_nodes)
-    if n_nodes <= TRIANGLE_DENSE_MAX_NODES:
+    if g.dense:
         import pandas as pd
 
         sdist, touched = _dense_target_distsums(
@@ -635,7 +681,6 @@ def closeness_sampled_kernel_df(
         )
 
     raw = src_df.mapInArrow(run, "node long, sdist long")
-    kk, nn = float(k), float(n_nodes)
     return (
         raw.groupBy("node")
         .agg(F.sum("sdist").alias("sdist"))
@@ -813,7 +858,7 @@ def betweenness_kernel_df(
         return _empty_result(spark, "node long, betweenness_est double")
     cap = (1 << 62) if until_converged else levels
     scale = float(n_nodes) / float(k)
-    if n_nodes <= TRIANGLE_DENSE_MAX_NODES:
+    if g.dense:
         dense = _dense_brandes(g, np.searchsorted(g.nodes, ids), cap)
         if dense is not None:
             import pandas as pd
@@ -913,7 +958,6 @@ def betweenness_kernel_df(
         )
 
     raw = src_df.mapInArrow(run, "node long, delta double")
-    scale = float(n_nodes) / float(k)
     out = (
         raw.groupBy("node")
         .agg(F.sum("delta").alias("sdelta"))
@@ -924,7 +968,7 @@ def betweenness_kernel_df(
             ),
         )
     )
-    if n_nodes <= TRIANGLE_DENSE_MAX_NODES:
+    if g.dense:
         # σ-overflow fallback from the dense tier (round-11 advice):
         # callers in the dense regime skip their own materialization
         # barriers because kernel outputs are normally driver-local —
@@ -976,10 +1020,9 @@ def degree_kernel_df(spark: SparkSession, g: GraphArrays) -> DataFrame:
     per-row weight sum — the same integers g2's explode + hash
     aggregate produces), with the n−1 normalization left to the SAME
     Spark expressions as the DataFrame path so the doubles are
-    bit-identical. Used when a composite already holds the collected
-    graph, and (round 12) by standalone g2 through collect_graph_auto
+    bit-identical. Used by g2 whenever its graph handle holds arrays
     — the raw-collect stat gate made the collection cheaper than one
-    distributed edge build (A/B in graph.py)."""
+    distributed edge build (round-12 A/B in graph.py)."""
     import pandas as pd
 
     if g.n_nodes == 0:

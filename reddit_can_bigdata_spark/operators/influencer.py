@@ -17,13 +17,28 @@ composite substitutes closeness at the same weight:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession, functions as F
+import operator
+from collections.abc import Callable
+from functools import reduce
 
-# the composite oracle below splices the centrality oracles out of the
-# registry at import time — make sure they are registered even when
-# this module is imported directly (not via registry._ensure_loaded)
-from reddit_can_bigdata_spark.operators import advanced as _advanced  # noqa: F401
-from reddit_can_bigdata_spark.operators import graph as _graph  # noqa: F401
+from pyspark.sql import DataFrame, SparkSession, Window, functions as F
+
+# importing the builders also registers the centrality oracles the
+# composite oracles below splice out of the registry at import time
+# (even when this module is imported directly, not via
+# registry._ensure_loaded)
+from reddit_can_bigdata_spark.operators.advanced import (
+    closeness_for_scale,
+    g5_eigenvector_centrality,
+)
+from reddit_can_bigdata_spark.operators.graph import (
+    CC_ITERS,
+    g2_degree_centrality,
+    g3b_betweenness_sampled,
+    g6_pagerank,
+    min_label_components,
+)
+from reddit_can_bigdata_spark.operators.graphkernel import Graph, resolve_graph
 from reddit_can_bigdata_spark.registry import REGISTRY, register
 
 _WEIGHTS = {"degree": 0.25, "closeness": 0.20, "eigen": 0.25, "pagerank": 0.30}
@@ -123,6 +138,86 @@ def _influencer_ref_weights_oracle() -> str:
     """
 
 
+def _arms(
+    spark: SparkSession, sf_dir: str, g: Graph, **extra: Callable[[], DataFrame]
+) -> dict[str, DataFrame]:
+    """Build a composite's metric arms over ONE resolved graph: degree
+    (``deg``), pagerank (``pr``), eigenvector (``ev``) and the caller's
+    ``extra`` arms — one shared CSR under the kernel gate, one
+    materialized edge aggregate above it.
+
+    Under the DENSE kernel gate every arm is a driver-local table
+    (numpy kernels + createDataFrame), so eager barriers and a thread
+    pool would only add 32-task barrier jobs to materialize data the
+    driver already holds — call them directly; one action over the
+    final plan dedupes the shared subtrees via exchange reuse
+    (optimization round 11; profiler: 13-14 jobs / ~300 tasks per
+    composite, all but 3 of them checkpoint machinery). Otherwise each
+    arm is an iterative loop or executor kernel that is expensive to
+    recompute and scheduler-latency-bound, so submit them CONCURRENTLY,
+    each behind an eager barrier — Spark's scheduler interleaves the
+    stages and the cluster stays full instead of draining between
+    rounds. Results are identical either way (each arm is
+    self-contained)."""
+    arms = {
+        "deg": lambda: g2_degree_centrality(spark, sf_dir, graph=g),
+        "pr": lambda: g6_pagerank(spark, sf_dir, graph=g),
+        "ev": lambda: g5_eigenvector_centrality(spark, sf_dir, graph=g),
+        **extra,
+    }
+    if g.dense:
+        return {name: arm() for name, arm in arms.items()}
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(len(arms)) as pool:
+        futures = {
+            name: pool.submit(lambda arm=arm: arm().localCheckpoint(eager=True))
+            for name, arm in arms.items()
+        }
+        return {name: f.result() for name, f in futures.items()}
+
+
+def _top20(g: Graph, m: DataFrame, weights: dict[str, float]) -> DataFrame:
+    """Min-max normalize each weighted column of the joined centrality
+    table ``m``, combine with ``weights`` (in order), round 6, and
+    rank the top 20 by (score desc, node)."""
+    # m has TWO consumers (the min/max bounds aggregate and the scored
+    # projection); off the dense tier a barrier keeps the join — and
+    # the arms under it — from running twice (r4 judge flagged the
+    # resulting cross-host variance). It is |nodes| rows, so cheap.
+    if not g.dense:
+        m = m.localCheckpoint(eager=True)
+    b = m.agg(*[
+        agg(c).alias(f"{c}_{end}")
+        for c in weights
+        for agg, end in ((F.min, "lo"), (F.max, "hi"))
+    ])
+
+    def norm(c: str):
+        lo, hi = F.col(f"{c}_lo"), F.col(f"{c}_hi")
+        return F.when(hi > lo, (F.col(c) - lo) / (hi - lo)).otherwise(F.lit(0.0))
+
+    comp = reduce(operator.add, [F.lit(w) * norm(c) for c, w in weights.items()])
+    scored = m.crossJoin(F.broadcast(b)).select(
+        "node", F.round(comp, 6).alias("composite_score")
+    )
+    w = Window.orderBy(F.desc("composite_score"), F.asc("node"))
+    return (
+        scored.withColumn("influencer_rank", F.row_number().over(w).cast("long"))
+        .where(F.col("influencer_rank") <= 20)
+        .select("influencer_rank", "node", "composite_score")
+    )
+
+
+#: the composite's four columns and weights, in summation order
+_COMPOSITE_WEIGHTS = {
+    "degree_centrality": _WEIGHTS["degree"],
+    "closeness": _WEIGHTS["closeness"],
+    "eigenvector": _WEIGHTS["eigen"],
+    "pagerank": _WEIGHTS["pagerank"],
+}
+
+
 @register(
     "influencer_composite_ref_weights",
     oracle=_influencer_ref_weights_oracle(),
@@ -135,95 +230,25 @@ def influencer_composite_ref_weights(spark: SparkSession, sf_dir: str) -> DataFr
     set, feasible distributed now that `g3b_betweenness_sampled`
     exists (the default `influencer_composite_top20` documents the
     closeness substitution it previously required). Shares one
-    materialized edge table across all four metrics."""
-    from reddit_can_bigdata_spark.operators.advanced import g5_eigenvector_centrality
-    from reddit_can_bigdata_spark.operators.graph import (
-        _edges,
-        g2_degree_centrality,
-        g3b_betweenness_sampled,
-        g6_pagerank,
+    resolved graph across all four metrics."""
+    g = resolve_graph(spark, sf_dir)
+    a = _arms(
+        spark, sf_dir, g, bw=lambda: g3b_betweenness_sampled(spark, sf_dir, graph=g)
     )
-
-    from reddit_can_bigdata_spark.operators.graphkernel import collect_graph_auto
-
-    # One shared CSR across all four metrics under the kernel gate
-    # (see influencer_composite_top20)
-    g = collect_graph_auto(spark, sf_dir)
-    ed = None
-    if g is None:
-        ed = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    deg = g2_degree_centrality(spark, sf_dir, edges=ed, graph=g).select(
-        "node", "degree_centrality"
-    )
-    # under the dense kernel gate all metrics are driver-local tables:
-    # skip the checkpoint barriers (see influencer_composite_top20)
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        TRIANGLE_DENSE_MAX_NODES,
-    )
-
-    if g is not None and 0 < g.n_nodes <= TRIANGLE_DENSE_MAX_NODES:
-        pr = g6_pagerank(spark, sf_dir, edges=ed, graph=g)
-        ev = g5_eigenvector_centrality(spark, sf_dir, edges=ed, graph=g)
-        bw = g3b_betweenness_sampled(spark, sf_dir, edges=ed, graph=g)
-    else:
-        # independent iterative metrics — submit concurrently (see
-        # influencer_composite_top20)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(3) as pool:
-            fpr = pool.submit(
-                lambda: g6_pagerank(spark, sf_dir, edges=ed, graph=g).localCheckpoint(
-                    eager=True
-                )
-            )
-            fev = pool.submit(
-                lambda: g5_eigenvector_centrality(
-                    spark, sf_dir, edges=ed, graph=g
-                ).localCheckpoint(eager=True)
-            )
-            fbw = pool.submit(
-                lambda: g3b_betweenness_sampled(
-                    spark, sf_dir, edges=ed, graph=g
-                ).localCheckpoint(eager=True)
-            )
-            pr, ev, bw = fpr.result(), fev.result(), fbw.result()
     m = (
-        deg.join(pr, "node")
-        .join(ev, "node")
-        .join(bw, "node", "left")
+        a["deg"].select("node", "degree_centrality")
+        .join(a["pr"], "node")
+        .join(a["ev"], "node")
+        .join(a["bw"], "node", "left")
         .withColumn("betweenness", F.coalesce(F.col("betweenness_est"), F.lit(0.0)))
         .drop("betweenness_est")
     )
-    b = m.agg(
-        F.min("degree_centrality").alias("d_lo"), F.max("degree_centrality").alias("d_hi"),
-        F.min("betweenness").alias("b_lo"), F.max("betweenness").alias("b_hi"),
-        F.min("eigenvector").alias("e_lo"), F.max("eigenvector").alias("e_hi"),
-        F.min("pagerank").alias("p_lo"), F.max("pagerank").alias("p_hi"),
-    )
-
-    def norm(col: str, lo: str, hi: str):
-        return F.when(
-            F.col(hi) > F.col(lo),
-            (F.col(col) - F.col(lo)) / (F.col(hi) - F.col(lo)),
-        ).otherwise(F.lit(0.0))
-
-    comp = (
-        F.lit(0.25) * norm("degree_centrality", "d_lo", "d_hi")
-        + F.lit(0.20) * norm("betweenness", "b_lo", "b_hi")
-        + F.lit(0.25) * norm("eigenvector", "e_lo", "e_hi")
-        + F.lit(0.30) * norm("pagerank", "p_lo", "p_hi")
-    )
-    scored = m.crossJoin(F.broadcast(b)).select(
-        "node", F.round(comp, 6).alias("composite_score")
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("composite_score"), F.asc("node"))
-    return (
-        scored.withColumn("influencer_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("influencer_rank") <= 20)
-        .select("influencer_rank", "node", "composite_score")
-    )
+    return _top20(g, m, {
+        "degree_centrality": 0.25,
+        "betweenness": 0.20,
+        "eigenvector": 0.25,
+        "pagerank": 0.30,
+    })
 
 
 @register(
@@ -240,8 +265,8 @@ def influencer_composite_top20(
     weighted composite → top-20 ranks. The four centrality jobs each
     reduce to |nodes|-sized outputs, so the normalize/rank tail is
     trivially small no matter how big the raw data was. The expensive
-    shared input — the co-occurrence edge list — is materialized ONCE
-    (localCheckpoint) and fed to all four, not rebuilt per metric.
+    shared input — the co-occurrence graph — is resolved ONCE and fed
+    to all four, not rebuilt per metric.
 
     ``closeness_mode`` (round-3 advice): the REGISTERED query pins
     ``'exact'`` so its oracle (which encodes exact g4 closeness) can
@@ -250,123 +275,20 @@ def influencer_composite_top20(
     the Eppstein–Wang estimator via `closeness_for_scale` — exact
     closeness is O(N²) state and would be the first component to die
     at 100×; the estimator path has its own oracle rows (g4c/g4d)."""
-    from reddit_can_bigdata_spark.operators.advanced import (
-        closeness_for_scale,
-        g5_eigenvector_centrality,
+    g = resolve_graph(spark, sf_dir)
+    a = _arms(
+        spark,
+        sf_dir,
+        g,
+        cl=lambda: closeness_for_scale(spark, sf_dir, graph=g, mode=closeness_mode),
     )
-    from reddit_can_bigdata_spark.operators.graph import (
-        _edges,
-        g2_degree_centrality,
-        g6_pagerank,
+    m = (
+        a["deg"].select("node", "degree_centrality")
+        .join(a["pr"], "node")
+        .join(a["ev"], "node")
+        .join(a["cl"], "node")
     )
-    from reddit_can_bigdata_spark.operators.graphkernel import collect_graph_auto
-
-    # Optimization round 11: collect the (gate-bounded) edge aggregate
-    # ONCE and share the CSR across all four centralities — previously
-    # each kernel-tier centrality re-ran its own gate count + Arrow
-    # collect + broadcast over the checkpointed edge table (4x the
-    # collect latency for identical arrays). Above the gate, fall back
-    # to the distributed loops over one localCheckpointed edge table,
-    # exactly as before.
-    g = collect_graph_auto(spark, sf_dir)
-    ed = None
-    if g is None:
-        ed = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    deg = g2_degree_centrality(spark, sf_dir, edges=ed, graph=g).select(
-        "node", "degree_centrality"
-    )
-    # Under the DENSE kernel gate every centrality is a driver-local
-    # table (numpy kernels + createDataFrame), so the eager
-    # localCheckpoints and the thread pool below would only add four
-    # 32-task barrier jobs per composite to materialize data the
-    # driver already holds — skip both; one action over the final plan
-    # dedupes the shared subtrees via exchange reuse (optimization
-    # round 11; profiler: 13-14 jobs / ~300 tasks per composite, all
-    # but 3 of them checkpoint machinery). Above the dense gate the
-    # concurrent-submission + checkpoint form is unchanged: there the
-    # per-round loops / executor kernels are genuinely expensive to
-    # recompute and scheduler-latency-bound.
-    from reddit_can_bigdata_spark.operators.graphkernel import (
-        TRIANGLE_DENSE_MAX_NODES,
-    )
-
-    dense = g is not None and 0 < g.n_nodes <= TRIANGLE_DENSE_MAX_NODES
-    if dense:
-        pr = g6_pagerank(spark, sf_dir, edges=ed, graph=g)
-        ev = g5_eigenvector_centrality(spark, sf_dir, edges=ed, graph=g)
-        cl = closeness_for_scale(
-            spark, sf_dir, edges=ed, mode=closeness_mode, graph=g
-        )
-    else:
-        # The three iterative centralities are independent until the
-        # final join and each is scheduler-latency-bound (per-round
-        # localCheckpoint barriers), so submit their jobs CONCURRENTLY —
-        # Spark's scheduler interleaves the stages and the cluster stays
-        # full instead of draining between rounds. Results are identical
-        # to sequential execution (each loop is self-contained).
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(3) as pool:
-            fpr = pool.submit(
-                lambda: g6_pagerank(spark, sf_dir, edges=ed, graph=g).localCheckpoint(
-                    eager=True
-                )
-            )
-            fev = pool.submit(
-                lambda: g5_eigenvector_centrality(
-                    spark, sf_dir, edges=ed, graph=g
-                ).localCheckpoint(eager=True)
-            )
-            # closeness_for_scale counts nodes for its gate (auto mode)
-            # INSIDE the pooled thread — a serial pre-count would add one
-            # edge-list pass of latency that all three pooled jobs wait
-            # behind (with a shared CSR the gate reads the arrays and the
-            # count disappears entirely)
-            fcl = pool.submit(
-                lambda: closeness_for_scale(
-                    spark, sf_dir, edges=ed, mode=closeness_mode, graph=g
-                ).localCheckpoint(eager=True)
-            )
-            pr, ev, cl = fpr.result(), fev.result(), fcl.result()
-    # the joined centrality table has TWO consumers (the min/max
-    # bounds aggregate and the scored projection); without a barrier
-    # the 4-way join — and the non-checkpointed degree computation
-    # under it — runs twice (r4 judge flagged the resulting cross-host
-    # variance). It is |nodes| rows, so the materialization is cheap —
-    # and unnecessary when every input is a driver-local table.
-    m = deg.join(pr, "node").join(ev, "node").join(cl, "node")
-    if not dense:
-        m = m.localCheckpoint(eager=True)
-    b = m.agg(
-        F.min("degree_centrality").alias("d_lo"), F.max("degree_centrality").alias("d_hi"),
-        F.min("closeness").alias("c_lo"), F.max("closeness").alias("c_hi"),
-        F.min("eigenvector").alias("e_lo"), F.max("eigenvector").alias("e_hi"),
-        F.min("pagerank").alias("p_lo"), F.max("pagerank").alias("p_hi"),
-    )
-
-    def norm(col: str, lo: str, hi: str):
-        return F.when(
-            F.col(hi) > F.col(lo),
-            (F.col(col) - F.col(lo)) / (F.col(hi) - F.col(lo)),
-        ).otherwise(F.lit(0.0))
-
-    comp = (
-        F.lit(_WEIGHTS["degree"]) * norm("degree_centrality", "d_lo", "d_hi")
-        + F.lit(_WEIGHTS["closeness"]) * norm("closeness", "c_lo", "c_hi")
-        + F.lit(_WEIGHTS["eigen"]) * norm("eigenvector", "e_lo", "e_hi")
-        + F.lit(_WEIGHTS["pagerank"]) * norm("pagerank", "p_lo", "p_hi")
-    )
-    scored = m.crossJoin(F.broadcast(b)).select(
-        "node", F.round(comp, 6).alias("composite_score")
-    )
-    from pyspark.sql import Window
-
-    w = Window.orderBy(F.desc("composite_score"), F.asc("node"))
-    return (
-        scored.withColumn("influencer_rank", F.row_number().over(w).cast("long"))
-        .where(F.col("influencer_rank") <= 20)
-        .select("influencer_rank", "node", "composite_score")
-    )
+    return _top20(g, m, _COMPOSITE_WEIGHTS)
 
 
 def _influencer_sampled_oracle() -> str:
@@ -449,60 +371,27 @@ def user_network_table(
 
     ``closeness_mode`` defaults to the auto size gate (logged by
     `closeness_for_scale`); not an oracle query, so the estimator
-    switch can't break parity here — pass ``'exact'`` to force.
-    """
-    from reddit_can_bigdata_spark.operators.advanced import (
-        closeness_for_scale,
-        g5_eigenvector_centrality,
-    )
-    from reddit_can_bigdata_spark.operators.graph import (
-        CC_ITERS,
-        _edges,
-        g2_degree_centrality,
-        g6_pagerank,
-        min_label_components,
-    )
-
-    from reddit_can_bigdata_spark.operators.graphkernel import collect_graph_auto
-
-    # one shared CSR across every metric under the kernel gate (same
-    # shape as the composites)
-    g = collect_graph_auto(spark, sf_dir)
-    ed = None
-    if g is None:
-        ed = _edges(spark, sf_dir).localCheckpoint(eager=True)
-    deg = g2_degree_centrality(spark, sf_dir, edges=ed, graph=g)
-    pr = g6_pagerank(spark, sf_dir, edges=ed, graph=g)
-    ev = g5_eigenvector_centrality(spark, sf_dir, edges=ed, graph=g)
-    # size-gated: exact g4 at test scale, sampled g4c at 100x
-    cl = closeness_for_scale(spark, sf_dir, edges=ed, mode=closeness_mode, graph=g)
-    # propagate the caller's mode: the registered composite defaults
-    # to 'exact' for oracle stability, but inside this (non-oracle)
-    # table a None/auto/sampled caller must not silently trigger the
-    # exact O(N*E) closeness the gate exists to avoid
-    top = influencer_composite_top20(
-        spark, sf_dir, closeness_mode=closeness_mode
-    ).select("node", "influencer_rank")
-    # components via the shared guarded loop (broadcast-ceiling +
-    # early-exit), not a private copy of it
-    if g is not None:
-        labels = min_label_components(None, CC_ITERS, graph=g).select(
+    switch can't break parity here — pass ``'exact'`` to force. The
+    influencer ranks come from the SAME centrality arms as the table
+    (the `influencer_composite_top20` ranking over them), so the
+    caller's mode reaches the ranking too and nothing is computed
+    twice."""
+    g = resolve_graph(spark, sf_dir)
+    a = _arms(
+        spark,
+        sf_dir,
+        g,
+        cl=lambda: closeness_for_scale(spark, sf_dir, graph=g, mode=closeness_mode),
+        # components via the shared guarded loop (broadcast-ceiling +
+        # early-exit), not a private copy of it
+        labels=lambda: min_label_components(g, CC_ITERS).select(
             "node", F.col("label").alias("community_id")
-        )
-    else:
-        e = ed.select("u", "v")
-        sym = e.select(F.col("u").alias("src"), F.col("v").alias("dst")).unionAll(
-            e.select(F.col("v").alias("src"), F.col("u").alias("dst"))
-        ).cache()
-        labels = min_label_components(sym, CC_ITERS).select(
-            "node", F.col("label").alias("community_id")
-        )
-
+        ),
+    )
+    m = a["deg"].join(a["pr"], "node").join(a["ev"], "node").join(a["cl"], "node")
+    top = _top20(g, m, _COMPOSITE_WEIGHTS).select("node", "influencer_rank")
     return (
-        deg.join(pr, "node")
-        .join(ev, "node")
-        .join(cl, "node")
-        .join(labels, "node")
+        m.join(a["labels"], "node")
         .join(top, "node", "left")
         .select(
             F.col("node").alias("user"),

@@ -54,8 +54,13 @@ def test_weighted_bfs_converged_exact(spark):
 
 def test_min_label_components_converged_single_component(spark):
     from reddit_can_bigdata_spark.operators.graph import min_label_components
+    from reddit_can_bigdata_spark.operators.graphkernel import resolve_graph
 
-    sym = _path_sym(spark).select("src", "dst")
+    # the symmetric pair list as an edge frame: each pair then appears
+    # in both directions twice, which min-label ignores
+    sym = resolve_graph(
+        spark, "", edges=_path_sym(spark).selectExpr("src AS u", "dst AS v")
+    )
     # 2 rounds < diameter: min-label hasn't swept the whole path
     trunc = min_label_components(sym, 2)
     assert trunc.select("label").distinct().count() > 1
@@ -63,6 +68,32 @@ def test_min_label_components_converged_single_component(spark):
     rows = conv.collect()
     assert {r["label"] for r in rows} == {0}
     assert len(rows) == N
+
+
+def test_min_label_components_records_round_count(spark):
+    """`LAST_COMPONENT_ROUNDS` holds the rounds the latest call ran, on
+    the kernel tier and on the pinned distributed loop alike: the path
+    needs N-1 label-changing rounds plus the one no-change round that
+    certifies the fixed point; a fixed budget stops at the budget."""
+    from reddit_can_bigdata_spark.operators import graph
+    from reddit_can_bigdata_spark.operators.graphkernel import resolve_graph
+
+    path = resolve_graph(
+        spark,
+        "",
+        edges=spark.createDataFrame(
+            [(i, i + 1) for i in range(N - 1)], "u long, v long"
+        ),
+    )
+    assert path.arrays is not None  # kernel tier
+    for state_mode in (None, "broadcast"):
+        graph.LAST_COMPONENT_ROUNDS = 0
+        graph.min_label_components(path, 2, state_mode).collect()
+        assert graph.LAST_COMPONENT_ROUNDS == 2, state_mode
+        graph.min_label_components(
+            path, 2, state_mode, until_converged=True
+        ).collect()
+        assert graph.LAST_COMPONENT_ROUNDS == N, state_mode
 
 
 def test_brandes_converged_matches_closed_form(spark):

@@ -52,11 +52,10 @@ def test_min_label_long_chain_converges(spark):
     import pytest
 
     from reddit_can_bigdata_spark.operators.graph import min_label_components
+    from reddit_can_bigdata_spark.operators.graphkernel import resolve_graph
 
     edges = [(i, i + 1) for i in range(19)]
-    sym = spark.createDataFrame(
-        edges + [(b, a) for a, b in edges], "src long, dst long"
-    ).repartition("dst").cache()
+    sym = resolve_graph(spark, "", edges=spark.createDataFrame(edges, "u long, v long"))
 
     labels = min_label_components(
         sym, 0, until_converged=True, shortcut=True, require_converged=True

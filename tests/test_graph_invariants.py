@@ -442,11 +442,14 @@ def test_wedge_sampled_zero_on_triangle_free(spark):
     from reddit_can_bigdata_spark.operators.graph import (
         g9b_triangles_wedge_sampled,
     )
+    from reddit_can_bigdata_spark.operators.graphkernel import resolve_graph
 
     bip = spark.createDataFrame(
         [(u, v) for u in range(10) for v in range(10, 25)], "u long, v long"
     )
-    row = g9b_triangles_wedge_sampled(spark, "", edges=bip).collect()[0]
+    row = g9b_triangles_wedge_sampled(
+        spark, "", graph=resolve_graph(spark, "", edges=bip)
+    ).collect()[0]
     assert row["sum_closed_deg"] == 0
     assert row["triangles_est"] == 0.0
     assert row["avg_clustering_est"] == 0.0
@@ -458,12 +461,15 @@ def test_wedge_sampled_exact_on_complete_graph(spark):
     from reddit_can_bigdata_spark.operators.graph import (
         g9b_triangles_wedge_sampled,
     )
+    from reddit_can_bigdata_spark.operators.graphkernel import resolve_graph
 
     n = 20
     kn = spark.createDataFrame(
         [(u, v) for u in range(n) for v in range(u + 1, n)], "u long, v long"
     )
-    row = g9b_triangles_wedge_sampled(spark, "", edges=kn).collect()[0]
+    row = g9b_triangles_wedge_sampled(
+        spark, "", graph=resolve_graph(spark, "", edges=kn)
+    ).collect()[0]
     assert row["triangles_est"] == n * (n - 1) * (n - 2) / 6
     assert row["avg_clustering_est"] == 1.0
 
@@ -476,10 +482,15 @@ def test_wedge_sampled_close_to_exact_on_sparse_graph(spark):
         g9_triangles_clustering,
         g9b_triangles_wedge_sampled,
     )
+    from reddit_can_bigdata_spark.operators.graphkernel import resolve_graph
 
     df = _synthetic_edges(spark, 200, 10)
-    exact = g9_triangles_clustering(spark, "", edges=df).collect()[0]
-    est = g9b_triangles_wedge_sampled(spark, "", edges=df).collect()[0]
+    exact = g9_triangles_clustering(
+        spark, "", graph=resolve_graph(spark, "", edges=df)
+    ).collect()[0]
+    est = g9b_triangles_wedge_sampled(
+        spark, "", graph=resolve_graph(spark, "", edges=df)
+    ).collect()[0]
     t, te = exact["total_triangles"], est["triangles_est"]
     assert t > 100, "graph too sparse to be a meaningful quality probe"
     assert abs(te - t) / t < 0.10, (t, te)
@@ -598,7 +609,7 @@ def test_closeness_budgeted_mod_still_estimates(spark, sf_dir):
 def test_raw_numpy_edge_build_matches_distributed_aggregate(spark, sf_dir):
     """Round-11 optimization guard: the driver-side numpy edge build
     (`graphkernel._edges_from_raw` over the raw (orderkey, suppkey)
-    columns, used by `collect_graph_raw` under the raw gate) must
+    columns, used by `resolve_graph` under the raw gate) must
     produce the EXACT (u, v, weight) multiset of the distributed
     `_edges` aggregate — dedup per order, u<v orientation, co-order
     counts — or every kernel-tier graph query silently drifts."""
@@ -659,7 +670,7 @@ def test_dense_blas_kernels_match_executor_kernels(spark, sf_dir):
     silently changes results."""
     from reddit_can_bigdata_spark.operators import graphkernel as gk
 
-    g = gk.collect_graph_auto(spark, sf_dir)
+    g = gk.resolve_graph(spark, sf_dir).arrays
     assert g is not None and 0 < g.n_nodes <= gk.TRIANGLE_DENSE_MAX_NODES
 
     def rows(df):

@@ -1,12 +1,14 @@
-"""Driver-memory measurement at the collect_graph_raw / kernel-tier
-ceiling (optimization round 12, VERDICT item #6 of round 11).
+"""Driver-memory measurement at the raw-collect / kernel-tier ceiling
+(optimization round 12, VERDICT item #6 of round 11).
 
 Two synthetic worst cases, run in THIS process so /proc VmHWM is the
 peak of the measured work:
 
-1. ``collect_graph_raw`` on a ~1 GiB on-disk lineitem.parquet of
-   random full-range (l_orderkey, l_suppkey) int64 pairs — the exact
-   gate ceiling (``GRAPH_RAW_COLLECT_MAX_BYTES``). Random keys do not
+1. ``arrays_from_raw`` on a ~1 GiB on-disk lineitem.parquet of
+   random full-range (l_orderkey, l_suppkey) int64 pairs — the raw
+   gate of an 8g driver (``raw_gate_bytes``: driver memory ÷
+   ``RAW_COLLECT_RSS_RATIO`` ≈ 1.14 GiB), called with an explicit
+   2 GiB limit so the file always qualifies. Random keys do not
    compress, so this maximizes rows-per-byte honesty; the Arrow
    transfer, the numpy copies and the packed-unique sort all happen at
    full size before the (empty) pair stage.
@@ -94,8 +96,8 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     jpid = jvm_pid(spark.sparkContext)
     # register only the lineitem view the raw collector reads
-    g = gk.collect_graph_raw(spark, str(tmp), max_bytes=2 << 30)
-    print(f"collect_graph_raw returned: "
+    g = gk.arrays_from_raw(spark, str(tmp), max_bytes=2 << 30)
+    print(f"arrays_from_raw returned: "
           f"{'None (over edge gate — expected for random keys with 0 pairs? no: pairs=0 is fine)' if g is None else f'{g.n_nodes} nodes / {g.n_sym_edges} sym edges'}")
     print(f"python VmHWM after raw collect: {vmhwm():.2f} GiB")
     if jpid:
